@@ -10,16 +10,16 @@ Reference semantics re-expressed Spark-first:
   (``CellIterator.java:183-215``, ``FastBboxInPolygon.java:23-72``,
   ``FastBboxOutsidePolygon``). Here the cover is computed once
   driver-side at a chosen zoom, broadcast as literal cell-id sets, and
-  drives a ``when/otherwise`` split: inside-cell rows are accepted with
-  zero Python, outside-cell rows are pruned at the scan, and only
-  boundary-cell rows pay the Arrow-batched PIP kernel. At 100 TB the
-  outside-prune is a partition-pruning predicate on the cell-id
-  partition column.
-* **PIP kernel** — vectorized numpy ray casting (crossing number),
-  the same algorithmic family as the reference's banded
-  ``FastInPolygon.java:107-150``; banding is unnecessary because the
-  kernel evaluates a whole Arrow batch against the (small, broadcast)
-  polygon at once.
+  drives a ``when/otherwise`` split: inside-cell rows are accepted by
+  cell id, outside-cell rows are pruned first, and only boundary-cell
+  rows evaluate the exact PIP. At 100 TB the outside-prune is a
+  partition-pruning predicate on the cell-id partition column.
+* **PIP** — ray casting (crossing number), the same algorithmic family
+  as the reference's banded ``FastInPolygon.java:107-150``. On the
+  engine side it is a Catalyst expression (``pip_col``: one term per
+  edge of the small, literal polygon, whole-stage codegen, no Python
+  boundary); ``pip_mask`` is the bit-identical numpy form that the
+  cell cover and the tests use.
 * **clipping** — Liang–Barsky segment clip against bboxes and
   Sutherland–Hodgman ring clip against convex windows (the reference
   delegates to JTS ``intersection``, ``Geo.java:185-191``; we only
@@ -71,6 +71,42 @@ def pip_mask(
         xs = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
     crossing = straddles & (x < xs)
     return (crossing.sum(axis=1) % 2).astype(bool)
+
+
+def pip_col(
+    lon: Column, lat: Column, poly_lon: list[float], poly_lat: list[float]
+) -> Column:
+    """``pip_mask`` as a Catalyst expression: one 0/1 crossing term per
+    non-horizontal edge, summed and tested for parity — whole-stage
+    codegen, no Python boundary (the reference's in-engine
+    ``FastInPolygon.java:107-150``).
+
+    Bit-identical to ``pip_mask``: each edge's straddle test
+    ``(y1 <= y) != (y2 <= y)`` is rewritten as the equivalent half-open
+    ``lo <= y < hi``, and the crossing abscissa keeps the kernel's
+    float64 op order ``x1 + (y - y1) * (x2 - x1) / (y2 - y1)`` with the
+    edge deltas folded into literals. Horizontal edges never straddle,
+    so they are dropped here (no division by zero under ANSI). A null
+    coordinate fails every straddle test: the result is False, never
+    null."""
+    px = [float(v) for v in poly_lon]
+    py = [float(v) for v in poly_lat]
+    if px[0] == px[-1] and py[0] == py[-1]:
+        px, py = px[:-1], py[:-1]
+    x = lon.cast("double")
+    y = lat.cast("double")
+    terms = []
+    for i in range(len(px)):
+        x1, y1 = px[i], py[i]
+        x2, y2 = px[(i + 1) % len(px)], py[(i + 1) % len(px)]
+        if y1 == y2:
+            continue
+        xs = F.lit(x1) + (y - F.lit(y1)) * F.lit(x2 - x1) / F.lit(y2 - y1)
+        straddles = (y >= F.lit(min(y1, y2))) & (y < F.lit(max(y1, y2)))
+        terms.append(F.when(straddles & (x < xs), 1).otherwise(0))
+    if not terms:
+        return F.lit(False)
+    return sum(terms[1:], terms[0]) % 2 == 1
 
 
 def seg_rect_intersects(
@@ -499,31 +535,20 @@ def polygon_contains_col(
     lon: str = "lon_e7",
     lat: str = "lat_e7",
 ) -> DataFrame:
-    """Append ``_in_aoi`` boolean: 3-way cover split + exact PIP kernel
-    for boundary cells only (areaOfInterest(Polygon) analog,
-    ``MapReducer.java:267-276``)."""
+    """Append ``_in_aoi`` boolean: 3-way cover split + exact PIP for
+    boundary cells only (areaOfInterest(Polygon) analog,
+    ``MapReducer.java:267-276``). Never null: a null coordinate (or
+    cell) reads False."""
     cover = polygon_cover(np.array(poly_lon_e7), np.array(poly_lat_e7), zoom)
     inside_cells = sorted(cover[INSIDE])
     boundary_cells = sorted(cover[BOUNDARY])
 
-    px = np.asarray(poly_lon_e7, dtype=np.float64)
-    py = np.asarray(poly_lat_e7, dtype=np.float64)
-
-    @pandas_udf("boolean")
-    def _pip(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        return pd.Series(pip_mask(lon_s.to_numpy(), lat_s.to_numpy(), px, py))
-
-    cell = cell_id_col(zoom, F.col(lon), F.col(lat))
-    df = df.withColumn("_cell", cell)
-    # outside cells never reach the kernel; inside cells never pay Python
-    in_inside = F.col("_cell").isin(inside_cells) if inside_cells else F.lit(False)
-    in_boundary = (
-        F.col("_cell").isin(boundary_cells) if boundary_cells else F.lit(False)
-    )
+    df = df.withColumn("_cell", cell_id_col(zoom, F.col(lon), F.col(lat)))
     return df.withColumn(
         "_in_aoi",
-        F.when(in_inside, F.lit(True)).when(
-            in_boundary, _pip(F.col(lon), F.col(lat))
+        F.when(F.col("_cell").isin(inside_cells), F.lit(True)).when(
+            F.col("_cell").isin(boundary_cells),
+            pip_col(F.col(lon), F.col(lat), poly_lon_e7, poly_lat_e7),
         ).otherwise(F.lit(False)),
     ).drop("_cell")
 
@@ -533,66 +558,24 @@ def filter_polygon(
     poly_lon_e7: list[int],
     poly_lat_e7: list[int],
     zoom: int = 6,
-    strategy: str = "inline",
 ) -> DataFrame:
-    """Keep rows inside the polygon. Both strategies prune
-    outside-cells BEFORE any Python (the partition-pruning analog —
-    the optimization that matters at 100 TB); they differ in how
-    inside-cell rows bypass the kernel:
-
-    * ``inline`` (default): one upstream pass; after the cell prune, a
-      CASE-guarded PIP filter. Catalyst extracts the UDF into an
-      ArrowEvalPython over all *surviving* rows (inside rows pay the
-      vectorized kernel unnecessarily), but the expensive upstream
-      (scan/window/join) executes exactly once. Measured faster
-      whenever upstream >> kernel, which is the common shape.
-    * ``union``: inside branch (zero Python) unioned with boundary
-      branch (kernel) — Python only on boundary rows, but the upstream
-      subtree executes once per branch (minus exchange reuse). Wins
-      only when the input is a cheap scan and the AOI is huge.
-    """
+    """Keep rows inside the polygon. Outside-cell rows are pruned by
+    cell id first (the partition-pruning analog — the optimization that
+    matters at 100 TB); inside-cell rows are accepted by cell id, and
+    the CASE short-circuits in codegen, so only boundary-cell rows
+    evaluate the ``pip_col`` edge terms."""
     cover = polygon_cover(np.array(poly_lon_e7), np.array(poly_lat_e7), zoom)
     inside_cells = sorted(cover[INSIDE])
     boundary_cells = sorted(cover[BOUNDARY])
 
-    px = np.asarray(poly_lon_e7, dtype=np.float64)
-    py = np.asarray(poly_lat_e7, dtype=np.float64)
-
-    @pandas_udf("boolean")
-    def _pip(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        return pd.Series(pip_mask(lon_s.to_numpy(), lat_s.to_numpy(), px, py))
-
     base = df.withColumn(
         "_cell", cell_id_col(zoom, F.col("lon_e7"), F.col("lat_e7"))
     )
-    if not inside_cells and not boundary_cells:
-        return base.filter(F.lit(False)).drop("_cell")
-
-    if strategy == "inline":
-        pruned = base.filter(F.col("_cell").isin(inside_cells + boundary_cells))
-        if not boundary_cells:
-            return pruned.drop("_cell")
-        keep = (
-            _pip(F.col("lon_e7"), F.col("lat_e7"))
-            if not inside_cells
-            else F.when(F.col("_cell").isin(inside_cells), F.lit(True)).otherwise(
-                _pip(F.col("lon_e7"), F.col("lat_e7"))
-            )
-        )
-        return pruned.filter(keep).drop("_cell")
-
-    inside = base.filter(F.col("_cell").isin(inside_cells)) if inside_cells else None
-    boundary = (
-        base.filter(F.col("_cell").isin(boundary_cells)).filter(
-            _pip(F.col("lon_e7"), F.col("lat_e7"))
-        )
-        if boundary_cells
-        else None
+    pruned = base.filter(F.col("_cell").isin(inside_cells + boundary_cells))
+    keep = F.when(F.col("_cell").isin(inside_cells), F.lit(True)).otherwise(
+        pip_col(F.col("lon_e7"), F.col("lat_e7"), poly_lon_e7, poly_lat_e7)
     )
-    out = inside if boundary is None else (
-        boundary if inside is None else inside.unionByName(boundary)
-    )
-    return out.drop("_cell")
+    return pruned.filter(keep).drop("_cell")
 
 
 def bbox_filter_col(bbox: tuple[int, int, int, int], lon="lon_e7", lat="lat_e7") -> Column:
@@ -626,37 +609,17 @@ def aggregate_by_polygon_regions(
     cover is computed once driver-side and broadcast as a literal
     (cell, region, is_boundary) candidates relation. Containment then
     costs one broadcast equi-join on the cell id (rows in no region's
-    cover are dropped by the join — the partition-prune analog);
-    inside-cell candidates are accepted with zero Python, and only
-    boundary-cell candidates pay one Arrow kernel that ray-casts each
-    batch against its region's polygon (grouped per region inside the
-    batch). The two branches are a union, not a CASE — Catalyst
-    extracts pandas UDFs out of CASE guards, a union is the only way to
-    keep inside rows out of Python (see CLAUDE.md)."""
+    cover are dropped by the join, the partition-prune analog). One
+    filter then keeps inside-cell candidates by their flag and
+    ray-casts only boundary-cell candidates against their own region's
+    polygon: ``~_bnd | CASE _ridx WHEN i THEN pip_col(region i)``, all
+    in codegen."""
     names = list(regions)
-    polys = [
-        (
-            np.asarray(regions[n][0], dtype=np.float64),
-            np.asarray(regions[n][1], dtype=np.float64),
-        )
-        for n in names
-    ]
     cand_rows: list[tuple[int, int, bool]] = []
-    for i, (px_, py_) in enumerate(polys):
-        cover = polygon_cover(px_, py_, zoom)
+    for i, n in enumerate(names):
+        cover = polygon_cover(np.array(regions[n][0]), np.array(regions[n][1]), zoom)
         cand_rows += [(c, i, False) for c in sorted(cover[INSIDE])]
         cand_rows += [(c, i, True) for c in sorted(cover[BOUNDARY])]
-
-    @pandas_udf("boolean")
-    def _pip_multi(lon_s: pd.Series, lat_s: pd.Series, idx_s: pd.Series) -> pd.Series:
-        xs = lon_s.to_numpy()
-        ys = lat_s.to_numpy()
-        idx = idx_s.to_numpy()
-        out = np.zeros(len(xs), dtype=bool)
-        for i in np.unique(idx):
-            m = idx == i
-            out[m] = pip_mask(xs[m], ys[m], polys[i][0], polys[i][1])
-        return pd.Series(out)
 
     spark = df.sparkSession
     # The candidates relation is shipped as ONE packed array<long>
@@ -685,13 +648,14 @@ def aggregate_by_polygon_regions(
         )
     base = df.withColumn("_cell", cell_id_col(zoom, F.col(lon), F.col(lat)))
     joined = base.join(F.broadcast(cand), "_cell")
-    inside_part = joined.filter(~F.col("_bnd"))
-    boundary_part = joined.filter(F.col("_bnd")).filter(
-        _pip_multi(F.col(lon), F.col(lat), F.col("_ridx"))
-    )
+    region_pip = F.lit(False)
+    for i in reversed(range(k)):
+        region_pip = F.when(
+            F.col("_ridx") == i, pip_col(F.col(lon), F.col(lat), *regions[names[i]])
+        ).otherwise(region_pip)
     name_arr = F.array(*[F.lit(n) for n in names])
     return (
-        inside_part.unionByName(boundary_part)
+        joined.filter(~F.col("_bnd") | region_pip)
         .withColumn("region_key", F.element_at(name_arr, F.col("_ridx") + 1))
         .drop("_cell", "_ridx", "_bnd")
     )

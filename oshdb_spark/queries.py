@@ -443,13 +443,13 @@ REGIONS = {
 
 def q_pip_diamond_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygonal areaOfInterest through the 3-way cell-cover split +
-    Arrow-batched ray-casting PIP kernel (only boundary-cell rows pay
-    Python; inside cells accepted by cell id, outside pruned)."""
+    the Catalyst ray-casting PIP (inside cells accepted by cell id,
+    outside pruned, only boundary-cell rows evaluate the edge terms)."""
     from oshdb_spark.operators.spatial import filter_polygon
 
     snap = _snapshot_at(spark, sf_dir, TILE_TS)
     # zoom 8 cover: ~16x more inside cells than zoom 6, so the share of
-    # rows paying the Python PIP kernel drops from ~40% to ~8%
+    # rows evaluating the per-edge PIP terms drops from ~40% to ~8%
     hit = filter_polygon(snap, DIAMOND_LON, DIAMOND_LAT, zoom=8)
     return hit.groupBy("tag_building").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -514,7 +514,7 @@ def q_agg_by_polygon_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregateByGeometry with ARBITRARY polygon sub-regions (the
     GeometrySplitter.java:80-203 parity gap closed beyond rectangles):
     snapshot rows replicated into each containing polygon via the
-    pre-gridded candidates join + per-region PIP kernel, counted,
+    pre-gridded candidates join + per-region Catalyst PIP, counted,
     zerofilled. Additivity (west + east == diamond) rides the same
     result; tests/test_spatial.py asserts it explicitly."""
     from oshdb_spark.operators.spatial import aggregate_by_polygon_regions
@@ -2072,9 +2072,9 @@ class _ResidentFrameCache:
         self._store.pop(key, None)
 
     def clear(self):
-        for key in list(self._order):
-            self._frames.pop(key, None)
-            self._store.pop(key, None)
+        """Evict every entry, unpersisting its checkpoint blocks."""
+        for key in self._order:
+            self._evict(key)
         self._order.clear()
 
 

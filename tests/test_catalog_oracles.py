@@ -26,11 +26,10 @@ def test_catalog_query_matches_oracle(spark, sf_dir, duck, name):
     assert verdict == "OK", verdict
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_query_runs(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0  # runs and has a stable schema
-    assert df.columns
+def test_every_query_has_an_oracle_twin():
+    """Every catalog query is graded: QUERIES and ORACLES name the same
+    set (no rows-only query, no orphan oracle)."""
+    assert set(QUERIES) == set(ORACLES)
 
 
 def test_approx_quantiles_within_tolerance_of_exact(spark, sf_dir):

@@ -109,16 +109,31 @@ def test_way_kind_measures_has_no_python(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_polygon_region_kernel_only_on_boundary_branch(spark, sf_dir):
-    """agg_by_polygon_region: exactly ONE ArrowEvalPython (the boundary
-    branch); the inside branch stays JVM."""
-    from oshdb_spark.queries import POLY_REGIONS, TILE_TS, _snapshot_at
+def test_polygon_aoi_paths_have_no_python(spark, sf_dir):
+    """Every polygon AOI path is pure Catalyst: no Python evaluator in
+    the catalog filter (pip_diamond_counts), the region overlay (which
+    is also one branch, no inside/boundary Union) or a fluent
+    SnapshotView polygon area of interest."""
     from oshdb_spark.operators.spatial import aggregate_by_polygon_regions
+    from oshdb_spark.plans import SnapshotView
+    from oshdb_spark.queries import (
+        DIAMOND_LAT, DIAMOND_LON, POLY_REGIONS, TILE_TS, _snapshot_at, q_pip_diamond_counts,
+    )
+    from oshdb_spark.sources.versions import SNAPSHOT_TS, load_versions
 
     snap = _snapshot_at(spark, sf_dir, TILE_TS)
-    plan = _physical(aggregate_by_polygon_regions(snap, POLY_REGIONS, zoom=6))
-    assert plan.count("ArrowEvalPython") == 1
-    assert "Union" in plan
+    regions = _physical(aggregate_by_polygon_regions(snap, POLY_REGIONS, zoom=6))
+    assert "EvalPython" not in regions
+    assert "Union" not in regions
+    assert "EvalPython" not in _physical(q_pip_diamond_counts(spark, sf_dir))
+    fluent = (
+        SnapshotView.on(load_versions(spark, sf_dir))
+        .timestamps(SNAPSHOT_TS)
+        .area_of_interest(polygon=(DIAMOND_LON, DIAMOND_LAT))
+        .aggregate_by_timestamp()
+        .count()
+    )
+    assert "EvalPython" not in _physical(fluent)
 
 
 def test_ivf_candidate_join_is_equi_join(spark, sf_dir):

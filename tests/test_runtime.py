@@ -386,3 +386,30 @@ def test_resident_frame_cache_evicts_oldest_dir(spark):
     assert rdd2 not in persisted_ids()  # and its blocks were freed
     # the rebuilt frame answers the same count as the evicted one did
     assert f2b.count() > 0
+
+
+def test_resident_frame_cache_clear_unpersists_blocks(spark):
+    """clear() evicts like capacity eviction does: every entry's
+    checkpointed RDD leaves the session's persistent set, and the next
+    get misses."""
+    from oshdb_spark.queries import _ResidentFrameCache
+
+    sc = spark.sparkContext
+
+    def persistent_ids() -> set[int]:
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    cache = _ResidentFrameCache()
+    keys = [("app", "dir-a"), ("app", "dir-b")]
+    ids = set()
+    for key in keys:
+        f = spark.range(100).localCheckpoint(eager=True)
+        cache.put(key, f, [f])
+        ids.add(f._jdf.queryExecution().logical().rdd().id())
+    before = persistent_ids()
+    assert ids <= before
+    cache.clear()
+    after = persistent_ids()
+    assert not ids & after
+    assert len(after) < len(before)
+    assert all(cache.get(k) is None for k in keys)

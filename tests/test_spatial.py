@@ -262,6 +262,90 @@ def test_polygon_regions_match_bruteforce_pip(spark, sf_dir):
     assert got == expected
 
 
+def _pip_probe_points(px, py, rng) -> list[tuple[int, int]]:
+    """Probe points for one polygon: random points on a 1-degree lattice
+    across its bbox (lattice points land on vertices and 45-degree
+    edges), random off-lattice points, every vertex, points along every
+    horizontal and vertical edge, and the world bounds."""
+    from oshdb_spark.grid import LAT_MAX, LON_MAX
+
+    x0, x1, y0, y1 = min(px), max(px), min(py), max(py)
+    pts = list(zip(
+        (rng.integers(x0 // E7 - 2, x1 // E7 + 3, 300) * E7).tolist(),
+        (rng.integers(y0 // E7 - 2, y1 // E7 + 3, 300) * E7).tolist(),
+    ))
+    pts += list(zip(
+        rng.integers(x0 - E7, x1 + E7, 300).tolist(),
+        rng.integers(y0 - E7, y1 + E7, 300).tolist(),
+    ))
+    pts += list(zip(px, py))
+    n = len(px)
+    for i in range(n):
+        ax, ay, bx, by = px[i], py[i], px[(i + 1) % n], py[(i + 1) % n]
+        if ay == by:
+            pts += [(int(v), ay) for v in np.linspace(min(ax, bx), max(ax, bx), 7)]
+        if ax == bx:
+            pts += [(ax, int(v)) for v in np.linspace(min(ay, by), max(ay, by), 7)]
+    pts += [(sx * LON_MAX, sy * LAT_MAX) for sx in (-1, 0, 1) for sy in (-1, 0, 1)]
+    return pts
+
+
+def test_pip_col_bit_identical_to_pip_mask(spark):
+    """The Catalyst crossing-number expression equals the numpy kernel
+    exactly, on-edge and vertex points included, for convex, concave
+    and triangle AOIs in open and closed ring form."""
+    from pyspark.sql import functions as F
+
+    from oshdb_spark.queries import L_POLY_LAT, L_POLY_LON, POLY_REGIONS
+
+    polys = {"diamond": (DIAMOND_LON, DIAMOND_LAT), "l_poly": (L_POLY_LON, L_POLY_LAT)}
+    polys.update({n: p for n, p in POLY_REGIONS.items() if len(p[0]) == 3})
+    assert {"west", "east", "null_tri"} <= set(polys)
+    polys.update({f"{n}_closed": (lo + lo[:1], la + la[:1]) for n, (lo, la) in polys.items()})
+
+    rng = np.random.default_rng(17)
+    pts = sorted({p for lo, la in polys.values() for p in _pip_probe_points(lo, la, rng)})
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "pid long, lon_e7 long, lat_e7 long"
+    )
+    got = df.select(
+        "pid",
+        *[
+            spatial.pip_col(F.col("lon_e7"), F.col("lat_e7"), lo, la).alias(n)
+            for n, (lo, la) in polys.items()
+        ],
+    ).toPandas().sort_values("pid")
+    x = np.array([p[0] for p in pts], dtype=np.float64)
+    y = np.array([p[1] for p in pts], dtype=np.float64)
+    for n, (lo, la) in polys.items():
+        want = spatial.pip_mask(x, y, np.asarray(lo, float), np.asarray(la, float))
+        assert want.any() and not want.all(), n  # both outcomes exercised
+        assert (got[n].to_numpy(dtype=bool) == want).all(), n
+        # the cover-pruned filter agrees too (null_tri has no inside cell)
+        kept = {r["pid"] for r in spatial.filter_polygon(df, lo, la).collect()}
+        assert kept == set(np.flatnonzero(want).tolist()), n
+
+
+def test_polygon_contains_col_null_coordinates_read_false(spark):
+    """A null coordinate is outside the AOI (False), never null."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, DIAMOND_CX, DIAMOND_CY), (2, None, DIAMOND_CY), (3, DIAMOND_CX, None),
+         (4, None, None)],
+        "pid long, lon_e7 long, lat_e7 long",
+    )
+    got = {
+        r["pid"]: r["_in_aoi"]
+        for r in spatial.polygon_contains_col(df, DIAMOND_LON, DIAMOND_LAT).collect()
+    }
+    assert got == {1: True, 2: False, 3: False, 4: False}
+    # the bare expression is null-safe too
+    assert df.select(
+        spatial.pip_col(F.col("lon_e7"), F.col("lat_e7"), DIAMOND_LON, DIAMOND_LAT).alias("p")
+    ).filter(F.col("p").isNull()).count() == 0
+
+
 def test_ear_clip_partitions_polygon_area():
     """Triangulation invariants: CCW triangles whose areas sum to the
     polygon area (planar shoelace), deterministic across runs."""

@@ -17,9 +17,11 @@ NOTES = {
         "partial+final hash agg. The scan is the only wide input."
     ),
     "pip_diamond_counts": (
-        "Cell-id prune before anything; ArrowEvalPython (the PIP kernel) sits "
-        "AFTER the inside/boundary cell filter, so only AOI rows reach Python; "
-        "agg is partial+final."
+        "Cell-id prune and PIP are one codegen Filter, pushed below the as-of "
+        "probe (each version is tested once, not once per snapshot): the cell "
+        "id prunes outside cells and accepts inside ones, and only "
+        "boundary-cell rows evaluate the per-edge ray-casting terms. No Python "
+        "evaluator anywhere; agg is partial+final."
     ),
     "knn_k5": (
         "The DISPLAYED plan is the final union of per-ring-level results: "
